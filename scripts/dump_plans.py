@@ -2,14 +2,18 @@
 
 Usage: python scripts/dump_plans.py <section> ...
 Sections: flagship, q5, q1, pip_assign, minhash, asof
-Prints each as '=== <name> ===' + explain('formatted') output.
+Prints each as '=== <name> ===' + explain('formatted') output. The
+flagship section plans over a fixture images table written as parquet to a
+temporary directory; the other sections read the sf0.01 test data.
 """
 
 import contextlib
 import io
+import os
 import sys
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def fmt(df) -> str:
@@ -28,13 +32,15 @@ def main() -> None:
 
     qs = m.queries()
     targets = sys.argv[1:] or ["flagship", "q5", "q1", "pip_assign", "minhash", "asof"]
+    tmp = tempfile.TemporaryDirectory(prefix="dump_plans_")  # removed at exit
     for t in targets:
         if t == "flagship":
-            from stac_to_geocore_spark.fixtures import polygons_df
+            from stac_to_geocore_spark.fixtures import images_df, polygons_df
             from stac_to_geocore_spark.pipeline import flagship
 
-            images = spark.read.parquet("/root/repo/.cache/bench_images_2000000")
-            df = flagship(images, polygons_df(spark, 24))
+            path = os.path.join(tmp.name, "images")
+            images_df(spark, 200_000, bytes_mode="none").write.parquet(path)
+            df = flagship(spark.read.parquet(path), polygons_df(spark, 24))
         else:
             name = {
                 "q5": "q5_local_supplier", "q1": "q1_pricing_summary",

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stac_to_geocore_spark.cells.tiles import tile_x_expr, tile_y_expr
-from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX, covers_df
+from stac_to_geocore_spark.spatial.pip import bbox_refine, plan_covers
 
 COVER_RES = 5
 
@@ -91,45 +91,19 @@ def flagship(
     res: int = 7,
     s2_level: int = 12,
     zoom: int = 12,
-    broadcast_covers: bool = True,
-    salt_factor: int = 0,
 ) -> DataFrame:
     """encode -> PIP assign (broadcast cell join + refine) -> assignments.
 
-    salt_factor > 0 switches to the salted shuffle-join path (for cover
-    sides too large to broadcast with heavy cell skew).
+    The polygon side is pip_join's: plan_covers plans dim-sized sets on the
+    driver and bigger ones distributed, and bbox_refine is the exact refine.
+    Covers are always broadcast on cell_p5, so the images side never
+    shuffles; a skewed cover side too big to broadcast belongs to pip_join's
+    salted shuffle join.
     """
     enc = encode_stage(images, res, s2_level, zoom)
-    # dim-sized polygon sets plan their covers on the driver (pure numpy, no
-    # Spark job or extra python-worker round — same reasoning as the
-    # reference's driver-side pagination planner); big polygon tables go
-    # through the distributed covers_df path. ONE bounded limit-probe job
-    # doubles as the collect (a separate count() was an extra job per call)
-    driver_plan_max = DRIVER_DIM_MAX
-    pdf = polygons.limit(driver_plan_max + 1).toPandas()
-    if len(pdf) <= driver_plan_max:
-        from stac_to_geocore_spark.spatial.cover import COVER_SCHEMA, covers_pdf
-
-        covers = images.sparkSession.createDataFrame(
-            covers_pdf(pdf, fixed_res=COVER_RES), COVER_SCHEMA
-        ).withColumnRenamed("cell", "cell_p5")
-    else:
-        covers = covers_df(polygons, fixed_res=COVER_RES).withColumnRenamed("cell", "cell_p5")
-    if broadcast_covers:
-        covers = F.broadcast(covers)
-    if salt_factor > 0:
-        enc = enc.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt_factor)))
-        covers = covers.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1))))
-        joined = enc.join(covers, ["cell_p5", "salt"], "inner")
-    else:
-        joined = enc.join(covers, "cell_p5", "inner")
-    return joined.filter(
-        F.col("fully_inside")
-        | (
-            (F.col("lon") >= F.col("west")) & (F.col("lon") <= F.col("east"))
-            & (F.col("lat") >= F.col("south")) & (F.col("lat") <= F.col("north"))
-        )
-    ).select(
+    covers, _ = plan_covers(polygons, fixed_res=COVER_RES)
+    covers = F.broadcast(covers.withColumnRenamed("cell", "cell_p5"))
+    return enc.join(covers, "cell_p5", "inner").filter(bbox_refine()).select(
         "image_id",
         "poly_id",
         "lon",

@@ -30,7 +30,13 @@ class LocalObjectStore:
         os.makedirs(root, exist_ok=True)
 
     def _path(self, key: str) -> str:
-        return os.path.join(self.root, key)
+        # keys embed item/collection ids from the remote STAC API; an id
+        # like "x/../../y" must not reach outside the store (a manifest line
+        # is also a key that delete_previous_run removes)
+        rel = os.path.normpath(key)
+        if os.path.isabs(rel) or rel == os.pardir or rel.startswith(os.pardir + os.sep):
+            raise ValueError(f"object key escapes the store root: {key!r}")
+        return os.path.join(self.root, rel)
 
     def put(self, key: str, text: str) -> None:
         p = self._path(key)

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from stac_to_geocore_spark.cells import h3x
+from stac_to_geocore_spark.partitioning import fan_out
 
 DEG = 180.0 / math.pi
 # gnomonic distortion bound within a face (sec^2 of max center->vertex angle)
@@ -42,9 +43,7 @@ _DISTORT = 1.7
 
 
 def cell_area_rad2(res: int) -> float:
-    """Area (rad^2) of one hex cell at `res` — the ONE place the lattice
-    area model lives; adaptive_res and overlap.py's vectorized res pickers
-    all derive from it so they can never drift apart."""
+    """Area (rad^2) of one hex cell at `res` (adaptive_res's lattice area model)."""
     s = h3x.res_spacing(res)
     return (math.sqrt(3.0) / 2.0) * s * s
 
@@ -278,19 +277,6 @@ def cover_bbox_batch_np(west: np.ndarray, south: np.ndarray, east: np.ndarray,
     return orig[box[order]], cells[order], full[order], handled
 
 
-def cover_bbox_compact_np(west: float, south: float, east: float, north: float,
-                          res: int, min_res: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """Multi-res compact cover: interior (fully-inside) cells collapse to
-    their aperture-7 ancestors wherever a complete 7-child set is present;
-    boundary cells stay at `res` for the exact refine. Returns
-    (compact_interior_cells, boundary_cells). Exact inverse:
-    h3_uncompact_np(interior, res) reproduces the fine interior set —
-    the storage/broadcast win for large polygons is ~7x per collapsed level.
-    min_res bounds the collapse (see h3_compact_np)."""
-    cells, full = cover_bbox_np(west, south, east, north, res)
-    return h3x.h3_compact_np(cells[full], min_res), np.sort(cells[~full])
-
-
 def merge_envelopes(boxes, max_k: int = 4) -> list[tuple[float, float, float, float]]:
     """Merge bboxes into at most max_k covering envelopes: union-find merge
     of overlapping boxes to a fixpoint, then greedy smallest-waste pair
@@ -358,284 +344,72 @@ COVER_SCHEMA = StructType(
 
 def covers_pdf(polys_pdf: pd.DataFrame, res_min: int = 5, res_max: int = 9,
                max_cells: int = 2048, fixed_res: int | None = None) -> pd.DataFrame:
-    """Driver-side cover planning (numpy, no Spark job): the right path when
-    polygons are a dim table (like the reference's driver-side pagination
-    planner). Column layout matches COVER_SCHEMA."""
-    out = []
-    for row in polys_pdf.itertuples(index=False):
-        res = fixed_res if fixed_res is not None else adaptive_res(
-            row.west, row.south, row.east, row.north, res_min, res_max, max_cells)
-        cells, full = cover_bbox_np(row.west, row.south, row.east, row.north, res)
-        out.append(pd.DataFrame({
-            "poly_id": row.poly_id, "res": np.int32(res), "cell": cells,
-            "fully_inside": full, "west": row.west, "south": row.south,
-            "east": row.east, "north": row.north,
-        }))
-    if not out:
+    """The one numpy cover planner: (poly_id, west, south, east, north) rows
+    -> COVER_SCHEMA rows, polygon-major with each polygon's cells sorted.
+
+    Called directly for a dim-sized polygon table (driver-side, no Spark
+    job — like the reference's driver-side pagination planner) and once per
+    Arrow batch inside covers_df's mapInPandas. Boxes are grouped by res
+    (fixed_res, else adaptive_res per box) and each group goes through the
+    batched kernel (~10x less numpy dispatch than a per-polygon loop); the
+    boxes it does not take (multi-face, or over its sample cap) fall back
+    to cover_bbox_np. The kernel is bit-identical to cover_bbox_np on every
+    box it takes, so the split never changes the output."""
+    if len(polys_pdf) == 0:
         return pd.DataFrame({f.name: pd.Series(dtype="object") for f in COVER_SCHEMA.fields})
-    return pd.concat(out, ignore_index=True)
-
-
-def covers_df(polys: DataFrame, res_min: int = 5, res_max: int = 9,
-              max_cells: int = 2048, fixed_res: int | None = None,
-              min_partitions: int | None = None) -> DataFrame:
-    """Distributed cover generation: one output row per (polygon, cell).
-
-    polys: (poly_id, west, south, east, north). Cover synthesis is pure numpy
-    per polygon inside mapInPandas — scales with polygon count, and each
-    polygon's cover is bounded by max_cells via adaptive resolution.
-
-    Parallelism: cover synthesis is CPU-bound Python work (~0.3 ms/polygon),
-    but a compact parquet dim table often reads as 1-2 file-split
-    partitions — which would serialize 10^5 polygons onto 1-2 cores (this
-    cost 100+ s at sf0.1 before the fix). The input is repartitioned up to
-    the cluster's core count when it arrives with fewer partitions; the
-    shuffled rows are 5 scalars each, so the exchange is trivially cheap
-    relative to the python work it parallelizes.
-    """
-    if min_partitions is None:
-        min_partitions = polys.sparkSession.sparkContext.defaultParallelism
-    # The probe costs one driver-side plan analysis (~ms, no job) — kept
-    # DELIBERATELY over an unconditional repartition: repartition(cores)
-    # would silently DOWN-partition a big region table that arrives with
-    # thousands of file splits, collapsing the CPU-bound cover stage into
-    # core-count giant tasks with no straggler/retry granularity. The guard
-    # only ever RAISES parallelism (its purpose: a compact dim table read
-    # as 1-2 splits serializing 10^5 covers onto 2 cores), and the shuffled
-    # rows are 5 scalars each — noise next to the python work parallelized.
-    if polys.rdd.getNumPartitions() < min_partitions:
-        polys = polys.repartition(min_partitions)
-
-    empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in COVER_SCHEMA.fields})
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                yield empty
-                continue
-            wv = b["west"].to_numpy(np.float64)
-            sv = b["south"].to_numpy(np.float64)
-            ev = b["east"].to_numpy(np.float64)
-            nv = b["north"].to_numpy(np.float64)
-            pid = b["poly_id"].to_numpy(object)
-            parts = []
-            if fixed_res is not None:
-                # batched kernel for small single-face boxes (bit-identical
-                # to the per-polygon kernel; ~10x less numpy dispatch)
-                bi, cells, full, handled = cover_bbox_batch_np(wv, sv, ev, nv, fixed_res)
-                if len(cells):
-                    parts.append(pd.DataFrame({
-                        "poly_id": pid[bi],
-                        "res": np.full(len(cells), fixed_res, np.int32),
-                        "cell": cells, "fully_inside": full,
-                        "west": wv[bi], "south": sv[bi],
-                        "east": ev[bi], "north": nv[bi],
-                    }))
-                todo = np.nonzero(~handled)[0]
-            else:
-                todo = np.arange(len(b))
-            if len(todo):
-                ids, ress, cells_l, full_l = [], [], [], []
-                for i in todo:
-                    res = fixed_res if fixed_res is not None else adaptive_res(
-                        wv[i], sv[i], ev[i], nv[i], res_min, res_max, max_cells)
-                    cells, full = cover_bbox_np(wv[i], sv[i], ev[i], nv[i], res)
-                    ids.append(pid[i])
-                    ress.append(res)
-                    cells_l.append(cells)
-                    full_l.append(full)
-                # ONE frame per Arrow batch (a per-polygon DataFrame + concat
-                # costs ~0.14 ms/polygon — as much as the cover kernel itself)
-                counts = np.array([len(c) for c in cells_l])
-                parts.append(pd.DataFrame({
-                    "poly_id": np.repeat(np.asarray(ids, dtype=object), counts),
-                    "res": np.repeat(np.asarray(ress, dtype=np.int32), counts),
-                    "cell": np.concatenate(cells_l),
-                    "fully_inside": np.concatenate(full_l),
-                    "west": np.repeat(wv[todo], counts),
-                    "south": np.repeat(sv[todo], counts),
-                    "east": np.repeat(ev[todo], counts),
-                    "north": np.repeat(nv[todo], counts),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else empty
-
-    return polys.mapInPandas(gen, COVER_SCHEMA)
-
-
-COVER_EXPANDED_SCHEMA = StructType(
-    [
-        StructField("poly_id", StringType(), False),
-        StructField("lvl", IntegerType(), False),
-        StructField("nat", BooleanType(), False),
-        StructField("key", LongType(), False),
-        StructField("west", DoubleType(), False),
-        StructField("south", DoubleType(), False),
-        StructField("east", DoubleType(), False),
-        StructField("north", DoubleType(), False),
-    ]
-)
-
-
-def _validate_levels(fine_res: int, levels: list[int]) -> list[int]:
-    """The completeness argument REQUIRES a contiguous level range ending at
-    fine_res: with a gap (or fine_res missing), cells whose compact res
-    lands in the hole emit no native row and the at-least-one-side-native
-    join silently drops real pairs. Fail loudly at the API boundary."""
-    lvls = sorted({int(l) for l in levels})
-    if not lvls or lvls[-1] != fine_res or lvls != list(range(lvls[0], fine_res + 1)):
-        raise ValueError(
-            f"levels must be a contiguous range ending at fine_res={fine_res}; got {levels}"
-        )
-    return lvls
-
-
-def _compact_expanded_arrays(wv, sv, ev, nv, fine_res: int, lvls: list[int]
-                             ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Shared numpy body for the compact-expanded cover: batched fine
-    covers -> per-box compaction (only boxes that HAVE interior cells pay
-    the python loop) -> per-level ancestor expansion -> per-(box, lvl, key)
-    dedup. Returns (box_idx, lvl, nat, key), box-major.
-
-    The dedup matters: every boundary cell under the same coarse ancestor
-    would otherwise emit its own duplicate non-native row at that level —
-    up to ~7x per collapsed level of join-input duplication that distinct()
-    would have to absorb downstream."""
-    lo = lvls[0]
-    n = len(wv)
-    # batched fine covers; per-polygon fallback for multi-face/huge boxes
-    bi, cells, full, handled = cover_bbox_batch_np(wv, sv, ev, nv, fine_res)
-    todo = np.nonzero(~handled)[0]
-    if len(todo):
-        extra_c, extra_f, extra_b = [], [], []
-        for i in todo:
-            c, f = cover_bbox_np(wv[i], sv[i], ev[i], nv[i], fine_res)
-            extra_c.append(c)
-            extra_f.append(f)
-            extra_b.append(np.full(len(c), i, np.int64))
-        cells = np.concatenate([cells] + extra_c)
-        full = np.concatenate([full] + extra_f)
-        bi = np.concatenate([bi] + extra_b)
-    order = np.argsort(bi, kind="stable")
-    bi, cells, full = bi[order], cells[order], full[order]
-
-    # compact ONLY the boxes with interior cells (large polygons — rare)
-    has_int = np.bincount(bi[full], minlength=n) > 0 if full.any() else np.zeros(n, bool)
-    if has_int.any():
-        keep = ~has_int[bi]
-        parts_c = [cells[keep]]
-        parts_b = [bi[keep]]
-        starts = np.searchsorted(bi, np.arange(n + 1))
-        for i in np.nonzero(has_int)[0]:
-            sl = slice(starts[i], starts[i + 1])
-            c, f = cells[sl], full[sl]
-            cc = np.concatenate([h3x.h3_compact_np(c[f], lo), c[~f]])
-            parts_c.append(cc)
-            parts_b.append(np.full(len(cc), i, np.int64))
-        cells = np.concatenate(parts_c)
-        bi = np.concatenate(parts_b)
-
-    res_of = h3x.h3_unpack(cells)[3] if len(cells) else np.empty(0, np.int64)
-    out_key, out_lvl, out_box, out_nat = [], [], [], []
-    for l in lvls:
-        m = res_of >= l
-        if not m.any():
-            continue
-        out_key.append(h3x.h3_parent_np(cells[m], l))
-        out_lvl.append(np.full(int(m.sum()), l, np.int32))
-        out_box.append(bi[m])
-        out_nat.append(res_of[m] == l)
-    if not out_key:
-        e = np.empty(0, np.int64)
-        return e, e.astype(np.int32), np.empty(0, bool), e
-    key = np.concatenate(out_key)
-    lvl = np.concatenate(out_lvl)
-    bx = np.concatenate(out_box)
-    nat = np.concatenate(out_nat)
-    # dedup (box, lvl, key); a group is native if ANY of its rows is
-    order = np.lexsort((key, lvl, bx))
-    key, lvl, bx, nat = key[order], lvl[order], bx[order], nat[order]
-    new = np.ones(len(key), bool)
-    new[1:] = (bx[1:] != bx[:-1]) | (lvl[1:] != lvl[:-1]) | (key[1:] != key[:-1])
-    gstart = np.nonzero(new)[0]
-    nat_g = np.maximum.reduceat(nat.astype(np.int8), gstart).astype(bool)
-    return bx[gstart], lvl[gstart], nat_g, key[gstart]
-
-
-def covers_pdf_compact_expanded(polys_pdf: pd.DataFrame, fine_res: int,
-                                levels: list[int]) -> pd.DataFrame:
-    """Driver-side twin of covers_df_compact_expanded for dim-sized region
-    tables: pure numpy, no Spark jobs (the covers_pdf counterpart for the
-    compact join's broadcast path)."""
-    lvls = _validate_levels(fine_res, levels)
     wv = polys_pdf["west"].to_numpy(np.float64)
     sv = polys_pdf["south"].to_numpy(np.float64)
     ev = polys_pdf["east"].to_numpy(np.float64)
     nv = polys_pdf["north"].to_numpy(np.float64)
-    pid = polys_pdf["poly_id"].to_numpy(object)
-    bx, lvl, nat, key = _compact_expanded_arrays(wv, sv, ev, nv, fine_res, lvls)
+    if fixed_res is not None:
+        res = np.full(len(wv), fixed_res, np.int32)
+    else:
+        res = np.array([adaptive_res(w, s, e, n, res_min, res_max, max_cells)
+                        for w, s, e, n in zip(wv, sv, ev, nv)], np.int32)
+    boxes, cells, full = [], [], []
+    for r in np.unique(res).tolist():
+        grp = np.nonzero(res == r)[0]
+        bi, c, f, handled = cover_bbox_batch_np(wv[grp], sv[grp], ev[grp], nv[grp], r)
+        boxes.append(grp[bi])
+        cells.append(c)
+        full.append(f)
+        for i in grp[~handled]:
+            c, f = cover_bbox_np(wv[i], sv[i], ev[i], nv[i], r)
+            boxes.append(np.full(len(c), i, np.int64))
+            cells.append(c)
+            full.append(f)
+    bi = np.concatenate(boxes)
+    order = np.argsort(bi, kind="stable")
+    bi = bi[order]
     return pd.DataFrame({
-        "poly_id": pid[bx], "lvl": lvl, "nat": nat, "key": key,
-        "west": wv[bx], "south": sv[bx], "east": ev[bx], "north": nv[bx],
+        "poly_id": polys_pdf["poly_id"].to_numpy(object)[bi], "res": res[bi],
+        "cell": np.concatenate(cells)[order],
+        "fully_inside": np.concatenate(full)[order],
+        "west": wv[bi], "south": sv[bi], "east": ev[bi], "north": nv[bi],
     })
 
 
-def covers_df_compact_expanded(polys: DataFrame, fine_res: int,
-                               levels: list[int],
-                               min_partitions: int | None = None) -> DataFrame:
-    """Distributed COMPACT multi-res covers, pre-expanded into join rows.
+def covers_df(polys: DataFrame, res_min: int = 5, res_max: int = 9,
+              max_cells: int = 2048, fixed_res: int | None = None) -> DataFrame:
+    """Distributed cover generation: covers_pdf over each Arrow batch of
+    polys (poly_id, west, south, east, north) in one mapInPandas — one
+    output row per (polygon, cell), each cover bounded by max_cells via
+    adaptive resolution.
 
-    For each polygon: the fine-res cover is compacted (interior cells
-    collapse to aperture-7 ancestors, bounded at min(levels)); each compact
-    cell of res r then emits one (lvl, key=ancestor(cell, lvl)) row per
-    lvl in `levels` with lvl <= r, flagged nat = (lvl == r) on its NATIVE
-    level. Joining two such expansions on (lvl, key) with the condition
-    (A.nat OR B.nat) yields a complete candidate set: two intersecting
-    bboxes share a point whose fine cell c is represented in both compact
-    covers by SOME ancestor (res ra, rb); at lvl = min(ra, rb) both sides
-    emit ancestor(c, lvl) — ancestry composition is exact lattice math —
-    and the side with the coarser representation is NATIVE at that level
-    by construction, so the join cannot miss the pair (duplicates from
-    coarser shared levels are removed by the caller's distinct). The
-    native-side requirement is what kills the coarse-level quadratic:
-    without it, every fine cell's ancestor rows join every OTHER fine
-    cell's ancestor rows at the coarsest level — measured 30x MORE
-    candidates than the single-res join on a dense fixture; with it,
-    coarse levels only match against genuinely-collapsed interiors.
-
-    The expansion happens INSIDE the one mapInPandas (numpy h3_parent_np
-    per level over the whole batch): the cover subtree is computed once,
-    with no per-level union branches or re-scans. Expansion multiplies
-    compact rows by <= len(levels) (typically 4) while compaction divides
-    large-polygon interiors by up to 7^(len(levels)-1) — see
-    bbox_overlap_join_compact for the measured regime analysis."""
-    if min_partitions is None:
-        min_partitions = polys.sparkSession.sparkContext.defaultParallelism
-    if polys.rdd.getNumPartitions() < min_partitions:
-        polys = polys.repartition(min_partitions)
-    lvls = _validate_levels(fine_res, levels)
-
-    empty = pd.DataFrame({f.name: pd.Series(dtype="object") for f in COVER_EXPANDED_SCHEMA.fields})
+    Parallelism: cover synthesis is CPU-bound Python work, but a compact
+    parquet dim table often reads as 1-2 file-split partitions — which
+    would serialize 10^5 polygons onto 1-2 cores (this cost 100+ s at sf0.1
+    before the fix). fan_out raises the partition count to the cluster's
+    parallelism and never lowers it, so a big region table with thousands
+    of splits keeps its task granularity; the shuffled rows are 5 scalars
+    each, noise next to the python work they parallelize.
+    """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            if len(b) == 0:
-                yield empty
-                continue
-            wv = b["west"].to_numpy(np.float64)
-            sv = b["south"].to_numpy(np.float64)
-            ev = b["east"].to_numpy(np.float64)
-            nv = b["north"].to_numpy(np.float64)
-            pid = b["poly_id"].to_numpy(object)
-            bx, lvl, nat, key = _compact_expanded_arrays(wv, sv, ev, nv, fine_res, lvls)
-            if len(bx) == 0:
-                yield empty
-                continue
-            yield pd.DataFrame({
-                "poly_id": pid[bx], "lvl": lvl, "nat": nat, "key": key,
-                "west": wv[bx], "south": sv[bx], "east": ev[bx], "north": nv[bx],
-            })
+            yield covers_pdf(b, res_min, res_max, max_cells, fixed_res)
 
-    return polys.mapInPandas(gen, COVER_EXPANDED_SCHEMA)
+    return fan_out(polys).mapInPandas(gen, COVER_SCHEMA)
 
 
 def register_cover_udtf(spark: SparkSession, name: str = "cover_cells") -> None:

@@ -38,8 +38,59 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from stac_to_geocore_spark.cells.h3x import h3_encode, multi_res_cells
-from stac_to_geocore_spark.spatial.cover import DRIVER_DIM_MAX, covers_df
+from stac_to_geocore_spark.cells.h3x import multi_res_cells
+from stac_to_geocore_spark.partitioning import fan_out
+from stac_to_geocore_spark.spatial.cover import (
+    COVER_SCHEMA,
+    DRIVER_DIM_MAX,
+    covers_df,
+    covers_pdf,
+    merge_envelopes,
+)
+
+
+def plan_covers(
+    polygons: DataFrame,
+    res_min: int = 5,
+    res_max: int = 9,
+    max_cells: int = 2048,
+    fixed_res: int | None = None,
+    polygons_are_dim: bool | None = None,
+) -> tuple[DataFrame, pd.DataFrame | None]:
+    """The polygon side of the cell join, planned in ONE place for pip_join
+    and pipeline.flagship: returns (covers in COVER_SCHEMA, the driver-side
+    cover frame or None when the covers were planned distributed).
+
+    polygons_are_dim: None (default) probes with ONE bounded
+    `limit(DRIVER_DIM_MAX+1).toPandas()` job that doubles as the collect
+    when the set is small (a separate count() was one extra Spark job per
+    call). A dim-sized set is planned on the driver by covers_pdf (pure
+    numpy, no further Spark job); a bigger one goes through the distributed
+    covers_df path. False skips the probe and goes straight to covers_df
+    (the only case that saves the job). True asserts the caller's dim
+    claim: the same bounded collect, but a table over DRIVER_DIM_MAX rows
+    raises instead of silently switching paths."""
+    if polygons_are_dim is not False:
+        probe = polygons.limit(DRIVER_DIM_MAX + 1).toPandas()
+        if len(probe) <= DRIVER_DIM_MAX:
+            cov_pdf = covers_pdf(probe, res_min, res_max, max_cells, fixed_res)
+            return polygons.sparkSession.createDataFrame(cov_pdf, COVER_SCHEMA), cov_pdf
+        if polygons_are_dim is True:
+            raise ValueError(
+                f"polygons_are_dim=True but the polygon table exceeds "
+                f"{DRIVER_DIM_MAX} rows — drop the hint (None) or pass False"
+            )
+    return covers_df(polygons, res_min, res_max, max_cells, fixed_res), None
+
+
+def bbox_refine(lon: str = "lon", lat: str = "lat") -> Column:
+    """The exact refine of a cover-cell join: a candidate survives when its
+    cell lies fully inside the polygon bbox or the point is inside the bbox
+    (closed edges) — pure JVM column math, fused into the join."""
+    return F.col("fully_inside") | (
+        (F.col(lon) >= F.col("west")) & (F.col(lon) <= F.col("east"))
+        & (F.col(lat) >= F.col("south")) & (F.col(lat) <= F.col("north"))
+    )
 
 
 def pip_join(
@@ -66,14 +117,7 @@ def pip_join(
     None lets Catalyst/AQE decide from size stats.
     salt_factor > 0 salts the join key (use for skewed cells when the cover
     side must shuffle).
-    polygons_are_dim: None (default) probes with ONE bounded
-    `limit(driver_plan_max+1).toPandas()` job that doubles as the collect
-    when the set is small (round 2 ran a separate count() job first — one
-    extra Spark job per call, measured as part of the r2 pip_assign
-    regression). False skips the probe and goes straight to the
-    distributed covers path (the only case that saves the job). True
-    asserts the caller's dim claim: the same bounded collect, but a table
-    over driver_plan_max rows raises instead of silently switching paths.
+    polygons_are_dim: routing hint for the cover side (see plan_covers).
 
     Dim-sized polygon sets plan their covers on the driver (pure numpy,
     zero extra Spark jobs) and contribute a JVM-side bbox-union pre-filter
@@ -83,24 +127,11 @@ def pip_join(
     table, the predicate is what parquet min/max pruning pushes down.
     Bigger polygon tables go through the distributed covers_df path.
     """
-    driver_plan_max = DRIVER_DIM_MAX
     pts = points.select(point_id, lon, lat)
-    cov_pdf = None
-    if polygons_are_dim is not False:
-        probe = polygons.limit(driver_plan_max + 1).toPandas()
-        if len(probe) <= driver_plan_max:
-            cov_pdf = probe
-        elif polygons_are_dim is True:
-            raise ValueError(
-                f"polygons_are_dim=True but the polygon table exceeds "
-                f"{driver_plan_max} rows — drop the hint (None) or pass False"
-            )
+    covers, cov_pdf = plan_covers(polygons, res_min, res_max, max_cells, fixed_res,
+                                  polygons_are_dim)
     if cov_pdf is not None:
-        from stac_to_geocore_spark.spatial.cover import COVER_SCHEMA, covers_pdf
-
-        cov_pdf = covers_pdf(cov_pdf, res_min, res_max, max_cells, fixed_res)
-        covers = points.sparkSession.createDataFrame(cov_pdf, COVER_SCHEMA)
-        res_rows = sorted(int(r) for r in cov_pdf["res"].unique())
+        res_rows = cov_pdf["res"].unique()
         # bbox-union pre-filter, built from <=4 MERGED envelopes (still a
         # pushdown-ready range predicate; the exact cell join + refine do
         # the fine selection). Per-box clauses were measured at ~45 ms EACH
@@ -112,8 +143,6 @@ def pip_join(
         # more filtering than the old no-filter fallback.
         bboxes = cov_pdf[["poly_id", "west", "south", "east", "north"]].drop_duplicates("poly_id")
         if len(bboxes) > 0:
-            from stac_to_geocore_spark.spatial.cover import merge_envelopes
-
             if len(bboxes) <= 64:
                 envs = merge_envelopes(
                     bboxes[["west", "south", "east", "north"]].to_numpy(), max_k=4)
@@ -130,12 +159,11 @@ def pip_join(
             )
             pts = pts.filter(F.expr(clauses))
     else:
-        covers = covers_df(polygons, res_min, res_max, max_cells, fixed_res)
         res_rows = [r.res for r in covers.select("res").distinct().collect()]
     if broadcast_covers is True or (
         broadcast_covers is None and cov_pdf is not None and salt_factor == 0
     ):
-        # driver-planned covers are dim-sized BY CONSTRUCTION (<= driver_plan_max
+        # driver-planned covers are dim-sized BY CONSTRUCTION (<= DRIVER_DIM_MAX
         # polys x <= max_cells); pin the broadcast so Catalyst can never pick
         # the points side as the build side (observed at small sf: the scan
         # size estimate made it broadcast the exploded POINTS — harmless at
@@ -154,8 +182,6 @@ def pip_join(
     # single-row-group parquet read arrives as 1-2 splits and would run the
     # python cell encode on 1-2 cores; only ever RAISES parallelism, so a
     # 100 TB scan with thousands of splits passes through untouched
-    from stac_to_geocore_spark.partitioning import fan_out
-
     pts = fan_out(pts)
     # ONE scan, one fused UDF, one join: all needed resolutions are encoded
     # in a single python pass sharing one sphere projection, exploded to
@@ -178,13 +204,7 @@ def pip_join(
         joined = pts_r.join(covers, ["res", "cell", "salt"], "inner")
     else:
         joined = pts_r.join(covers, ["res", "cell"], "inner")
-    return joined.filter(
-        F.col("fully_inside")
-        | (
-            (F.col(lon) >= F.col("west")) & (F.col(lon) <= F.col("east"))
-            & (F.col(lat) >= F.col("south")) & (F.col(lat) <= F.col("north"))
-        )
-    ).select(point_id, "poly_id", lon, lat)
+    return joined.filter(bbox_refine(lon, lat)).select(point_id, "poly_id", lon, lat)
 
 
 def pip_ring_join(
@@ -213,8 +233,6 @@ def pip_ring_join(
     without inflating the broadcast by the cover size. Rings are a dim
     table by contract, so covers are planned driver-side (pure numpy, no
     extra Spark jobs)."""
-    from stac_to_geocore_spark.spatial.cover import COVER_SCHEMA, covers_pdf
-
     spark = points.sparkSession
     # rings are a dim table by contract (their coordinate arrays must
     # broadcast); the bounded probe makes a violated contract an explicit

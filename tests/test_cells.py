@@ -120,15 +120,6 @@ class TestH3Style:
         got = h3x.h3_compact_np(mixed)
         assert cells[0] in got and len(got) == 1 + 3 * (len(cells) - 1)
 
-    def test_compact_cover_roundtrip(self):
-        from stac_to_geocore_spark.spatial.cover import cover_bbox_compact_np, cover_bbox_np
-
-        cells, full = cover_bbox_np(-100.0, 45.0, -80.0, 60.0, 7)
-        interior, boundary = cover_bbox_compact_np(-100.0, 45.0, -80.0, 60.0, 7)
-        assert len(interior) < full.sum()  # actually compacted
-        assert (h3x.h3_uncompact_np(interior, 7) == np.sort(cells[full])).all()
-        assert (boundary == np.sort(cells[~full])).all()
-
     def test_h3_parent_column_rollup(self, spark):
         from pyspark.sql import functions as F
 

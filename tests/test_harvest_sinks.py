@@ -66,6 +66,31 @@ def test_delete_previous_run_without_manifest(tmp_path):
     assert delete_previous_run(LocalObjectStore(str(tmp_path / "empty"))) == 0
 
 
+def test_object_keys_cannot_escape_store_root(tmp_path):
+    import pytest
+
+    store = LocalObjectStore(str(tmp_path / "a" / "b" / "store"))
+    outside = tmp_path / "a" / "escaped.geojson"
+    outside.write_text("keep")
+    for key in ("ccmeo-coll-x/../../../escaped.geojson", "../escaped.geojson",
+                "..", str(outside)):
+        with pytest.raises(ValueError, match="escapes the store root"):
+            store.put(key, "{}")
+        with pytest.raises(ValueError, match="escapes the store root"):
+            store.get(key)
+        with pytest.raises(ValueError, match="escapes the store root"):
+            store.delete(key)
+    assert outside.read_text() == "keep"
+    assert not (tmp_path / "a" / "b" / "escaped.geojson").exists()
+    # ordinary prefixed keys, including ones that normalise inside the root
+    store.put("_manifest_parts/part-00000.txt", "k\n")
+    store.put("ccmeo-coll-x/../item.geojson", "{}")
+    assert store.get("_manifest_parts/part-00000.txt") == "k\n"
+    assert store.list() == ["_manifest_parts/part-00000.txt", "item.geojson"]
+    store.delete("item.geojson")
+    assert store.list() == ["_manifest_parts/part-00000.txt"]
+
+
 def test_snapshot_overwrite_atomic_swap(spark, tmp_path):
     fetch = make_fake_stac_fetch(n_items=30)
     _, colls_df, items_df = harvest(spark, API_ROOT, fetch)

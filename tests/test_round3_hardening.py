@@ -88,11 +88,11 @@ def test_knn_k_exceeds_point_count_ranks_all_points(spark):
 
 # ------------------------------------------------------- bbox_overlap_join
 
-def test_bbox_overlap_distributed_path_no_driver_collect(spark, monkeypatch):
-    """One side above driver_plan_max: covers must be planned distributed
-    (covers_pdf — the driver-side planner — must NOT see the big side), and
-    the pair set must match the analytic neighbor structure of a grid."""
-    import stac_to_geocore_spark.spatial.overlap as ov
+def test_bbox_overlap_distributed_path_no_driver_collect(spark):
+    """Both sides above driver_plan_max: neither side's cells may be
+    broadcast (no BroadcastExchange in the executed plan), and the pair set
+    must match the analytic neighbor structure of a grid."""
+    from stac_to_geocore_spark.spatial.overlap import bbox_overlap_join
 
     # grid of 1d-wide boxes spaced 0.9 apart -> each box overlaps exactly
     # its horizontal neighbors (closed edges): (i, i+1) for i in 0..n-2
@@ -105,21 +105,13 @@ def test_bbox_overlap_distributed_path_no_driver_collect(spark, monkeypatch):
         "north": [11.0] * n,
     }))
 
-    seen_sizes = []
-    real_covers_pdf = ov.covers_pdf
-
-    def spy_covers_pdf(pdf, *a, **kw):
-        seen_sizes.append(len(pdf))
-        return real_covers_pdf(pdf, *a, **kw)
-
-    monkeypatch.setattr(ov, "covers_pdf", spy_covers_pdf)
-    pairs = (
-        ov.bbox_overlap_join(big, big, driver_plan_max=50, fixed_res=4)
+    out = (
+        bbox_overlap_join(big, big, driver_plan_max=50, fixed_res=4)
         .filter(F.col("id_a") < F.col("id_b"))
-        .toPandas()
     )
-    # the driver-side planner never ran on the >50-row side
-    assert all(s <= 50 for s in seen_sizes), seen_sizes
+    pairs = out.toPandas()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan[:2000]
     want = {(f"g{i:04d}", f"g{i + 1:04d}") for i in range(n - 1)}
     got = set(zip(pairs.id_a, pairs.id_b))
     assert got == want, f"missing={want - got} extra={got - want}"
@@ -273,30 +265,6 @@ def test_snapshot_commit_is_compare_and_swap(spark, tmp_path):
 
 
 # ------------------------------------------- round-4 overlap res tuning
-
-
-def test_overlap_mean_res_is_coarser_than_cap_for_tiny_boxes():
-    """Tiny boxes must NOT cover at the finest cap-fitting res: the mean-box
-    rule picks the res where a typical cover is ~target_cells_per_box."""
-    import numpy as np
-    import pandas as pd
-
-    from stac_to_geocore_spark.spatial.overlap import (
-        _res_for_mean_area,
-        _res_stats_pdf,
-    )
-
-    rng = np.random.default_rng(3)
-    lon = rng.uniform(-120, -60, 200)
-    lat = rng.uniform(45, 75, 200)
-    pdf = pd.DataFrame({
-        "poly_id": [f"t{i}" for i in range(200)],
-        "west": lon, "south": lat, "east": lon + 0.08, "north": lat + 0.07,
-    })
-    cap_res, mean_area, _med = _res_stats_pdf(pdf, 3, 9, 2048)
-    mean_res = _res_for_mean_area(mean_area, 3, 9, 4.0)
-    assert cap_res == 9  # tiny boxes fit max_cells even at the finest res
-    assert mean_res < cap_res  # the tuned res is strictly coarser
 
 
 def test_overlap_join_output_invariant_under_res_choice(spark):

@@ -112,17 +112,28 @@ def test_flagship_matches_brute_force(spark, points_pdf, polys_pdf):
     assert (out.s2_l12.to_numpy() == s2_encode_np(out.lat.to_numpy(), out.lon.to_numpy(), 12)).all()
 
 
-def test_flagship_salted_path_same_result(spark, points_pdf, polys_pdf):
+def test_flagship_distributed_covers_path(spark, points_pdf, polys_pdf, monkeypatch):
+    """A polygon set over the driver-dim threshold takes the distributed
+    covers_df path; flagship must still broadcast the covers on cell_p5
+    (the images side never shuffles) and return the exact pair set."""
+    import contextlib
+    import io
+
+    import stac_to_geocore_spark.spatial.pip as pip_mod
     from stac_to_geocore_spark.pipeline import flagship
 
+    monkeypatch.setattr(pip_mod, "DRIVER_DIM_MAX", len(polys_pdf) - 1)
     polys = spark.createDataFrame(polys_pdf, POLYGONS_SCHEMA)
-    pts = spark.createDataFrame(points_pdf)
-    plain = {(r.image_id, r.poly_id) for r in flagship(pts, polys).collect()}
-    salted = {
-        (r.image_id, r.poly_id)
-        for r in flagship(pts, polys, broadcast_covers=False, salt_factor=8).collect()
-    }
-    assert plain == salted
+    out = flagship(spark.createDataFrame(points_pdf), polys)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain("formatted")
+    plan = buf.getvalue()
+    assert "MapInPandas" in plan  # covers_df, not the driver-side planner
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+    got = {(r.image_id, r.poly_id) for r in out.collect()}
+    assert got == _brute_pairs(points_pdf, polys_pdf)
 
 
 def test_bbox_overlap_join_vs_brute_force(spark):
@@ -181,6 +192,37 @@ def test_cover_batch_kernel_bit_identical():
             lo, hi = bounds[i], bounds[i + 1]
             assert np.array_equal(c_ref, cells_s[lo:hi]), i
             assert np.array_equal(f_ref, full_s[lo:hi]), i
+
+
+def test_covers_pdf_matches_per_polygon_reference(spark):
+    """covers_pdf (batched kernel + per-polygon fallback, grouped by res)
+    must equal a per-polygon cover_bbox_np loop row for row, at fixed and
+    adaptive res, on boxes the batched kernel takes and on boxes it leaves
+    to the fallback (face-straddling, over the sample cap); covers_df runs
+    the same planner per Arrow batch."""
+    from stac_to_geocore_spark.spatial.cover import covers_df, covers_pdf
+
+    rng = np.random.default_rng(5)
+    n = 80
+    lon = rng.uniform(-170, 170, n)
+    lat = rng.uniform(-70, 70, n)
+    half = np.where(np.arange(n) % 10 == 0, 12.0, 10 ** rng.uniform(-2, 0.5, n))
+    pdf = pd.DataFrame({
+        "poly_id": [f"c{i:03d}" for i in range(n)],
+        "west": lon - half, "south": lat - half / 2,
+        "east": lon + half, "north": lat + half / 2,
+    })
+    for kw in ({"fixed_res": 5}, {"max_cells": 128}):
+        rows = []
+        for r in pdf.itertuples(index=False):
+            res = kw.get("fixed_res") or adaptive_res(
+                r.west, r.south, r.east, r.north, 5, 9, kw.get("max_cells", 2048))
+            cells, full = cover_bbox_np(r.west, r.south, r.east, r.north, res)
+            rows += [(r.poly_id, res, int(c), bool(f)) for c, f in zip(cells, full)]
+        got = covers_pdf(pdf, **kw)
+        assert list(zip(got.poly_id, got.res, got.cell, got.fully_inside)) == rows, kw
+        dist = covers_df(spark.createDataFrame(pdf), **kw).collect()
+        assert sorted((r.poly_id, r.res, r.cell, r.fully_inside) for r in dist) == sorted(rows)
 
 
 def _scatter_boxes(spark, n, hot_fraction=0.0):
@@ -285,78 +327,3 @@ def test_bbox_overlap_salts_hot_cells_on_side_b_only(spark):
     got_s = {(r.id_a, r.id_b) for r in salted.collect()}
     got_p = {(r.id_a, r.id_b) for r in plain.collect()}
     assert got_s == got_p and len(got_s) > 0
-
-
-def _mixed_boxes(spark, n, dense=False):
-    """Tiny boxes plus 0.5% AOI-scale (12-16 deg) boxes; dense=True packs
-    the tiny boxes into a ~5x2.5 deg window (the coarse-cell quadratic
-    regime the compact join exists for)."""
-    from pyspark.sql import functions as Fx
-
-    m1 = Fx.pmod(Fx.col("id") * 40503 + 17, Fx.lit(50000))
-    m2 = Fx.pmod(Fx.col("id") * 9851 + 3, Fx.lit(25000))
-    big = (Fx.col("id") % 200 == 0)
-    dx = Fx.when(big, 6.0 + (Fx.col("id") % 3).cast("double")).otherwise(
-        0.02 + (Fx.col("id") % 5).cast("double") * 0.01)
-    dy = Fx.when(big, 5.0 + (Fx.col("id") % 2).cast("double")).otherwise(
-        0.02 + (Fx.col("id") % 7).cast("double") * 0.005)
-    denom = 10000.0 if dense else 1000.0
-    return spark.range(n).select(
-        Fx.concat(Fx.lit("b"), Fx.col("id").cast("string")).alias("poly_id"),
-        (Fx.lit(-80.0) + Fx.pmod(m1 * m1 + 7 * m1, Fx.lit(50000)) / denom).alias("lon"),
-        (Fx.lit(45.0) + Fx.pmod(m2 * m2 + 13 * m2, Fx.lit(25000)) / denom).alias("lat"),
-        dx.alias("dx"), dy.alias("dy"),
-    ).select(
-        "poly_id",
-        (F.col("lon") - F.col("dx")).alias("west"), (F.col("lat") - F.col("dy")).alias("south"),
-        (F.col("lon") + F.col("dx")).alias("east"), (F.col("lat") + F.col("dy")).alias("north"),
-    )
-
-
-def test_bbox_overlap_compact_matches_single_res(spark):
-    """The multi-res compact join must return EXACTLY the single-res join's
-    pairs on a mixed-size (AOI + tiny) fixture — the single-res path is
-    itself brute-force-anchored, so equality transitively anchors this one."""
-    from stac_to_geocore_spark.spatial.overlap import (
-        bbox_overlap_join,
-        bbox_overlap_join_compact,
-    )
-
-    polys = _mixed_boxes(spark, 11000)
-    ref = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join(polys, polys).filter("id_a < id_b").collect()}
-    got = {(r.id_a, r.id_b)
-           for r in bbox_overlap_join_compact(polys, polys).filter("id_a < id_b").collect()}
-    assert got == ref and len(ref) > 100
-
-
-def test_compact_expansion_native_condition_counts(spark):
-    """Structural claims of the compact join's candidate generation on the
-    dense regime: (a) the native-side join condition yields FEWER candidate
-    pairs than the single-res join's shared-coarse-cell join; (b) dropping
-    the native condition explodes candidates at the coarse levels (the
-    quadratic the condition exists to kill)."""
-    from stac_to_geocore_spark.spatial.cover import covers_df, covers_df_compact_expanded
-    from stac_to_geocore_spark.spatial.overlap import (
-        _res_for_mean_area,
-        _res_stats_distributed,
-    )
-
-    polys = _mixed_boxes(spark, 6000, dense=True)
-    r1, a1, _ = _res_stats_distributed(polys, 3, 9, 2048)
-    res_single = max(3, min(r1, _res_for_mean_area(a1, 3, 9, 4.0)))
-    cov = covers_df(polys, fixed_res=res_single).select("poly_id", "cell")
-    cand_single = cov.alias("A").join(cov.alias("B"), "cell").count()
-
-    r2, _a, med = _res_stats_distributed(polys, 3, 9, 262144, with_median=True)
-    fine = max(3, min(r2, _res_for_mean_area(med, 3, 9, 4.0)))
-    exp = covers_df_compact_expanded(
-        polys, fine, list(range(max(0, fine - 3), fine + 1))
-    ).select("poly_id", "lvl", "nat", "key")
-    on_nat = ((F.col("A.lvl") == F.col("B.lvl")) & (F.col("A.key") == F.col("B.key"))
-              & (F.col("A.nat") | F.col("B.nat")))
-    on_all = (F.col("A.lvl") == F.col("B.lvl")) & (F.col("A.key") == F.col("B.key"))
-    cand_nat = exp.alias("A").join(exp.alias("B"), on_nat).count()
-    cand_all = exp.alias("A").join(exp.alias("B"), on_all).count()
-    assert cand_nat < cand_single  # finer native cells beat forced-coarse
-    assert cand_all > 3 * cand_nat  # the coarse-level quadratic is real
