@@ -1302,8 +1302,8 @@ def _q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_stac_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STAC as a Spark Python Data Source (sources/stac_source.py): page
     walk = partition planning, one InputPartition per non-empty /search
-    page, typed rows without schema inference. Covers SURVEY §2 S1-S3
-    through the gate (driven by the deterministic in-process fake API)."""
+    page, one `stac_json` text per item. Covers SURVEY §2 S1-S3 through the
+    gate (driven by the deterministic in-process fake API)."""
     from stac_to_geocore_spark.sources.stac_source import StacDataSource
 
     spark.dataSource.register(StacDataSource)
@@ -1316,10 +1316,15 @@ def _q_stac_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("n_items", "95")
         .load()
     )
+
+    def field(path: str):
+        return F.get_json_object("stac_json", path)
+
     return df.select(
-        "id", "collection",
-        F.size("links").alias("n_links"), F.size(F.map_keys("assets")).alias("n_assets"),
-        F.col("properties.datetime").alias("item_datetime"),
+        field("$.id").alias("id"), field("$.collection").alias("collection"),
+        F.json_array_length(field("$.links")).alias("n_links"),
+        F.size(F.json_object_keys(field("$.assets"))).alias("n_assets"),
+        field("$.properties.datetime").alias("item_datetime"),
     )
 
 

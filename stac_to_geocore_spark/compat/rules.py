@@ -211,7 +211,10 @@ def asset_options(assets) -> list[dict]:
     for a in (assets or {}).values():
         href = a.get("href")
         media = a.get("type", "")
-        name = a.get("title", "Unknown/Inconnu")
+        # an explicit null title reads as absent (the reference crashes on it)
+        name = a.get("title")
+        if name is None:
+            name = "Unknown/Inconnu"
         role_key = ", ".join(a.get("roles"))  # None roles crash in the ref too
         name_en, name_fr = name.split("/") if "/" in name else (name, name)
         fmt = MEDIA_FORMAT.get(media, "Other")

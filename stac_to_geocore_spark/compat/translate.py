@@ -13,22 +13,22 @@ same semantics run as a distributed dataflow:
   collections_df --mapInPandas--> (key, json) rows
   root --driver (1 record)--> (key, json)
 
+Both DataFrames carry each STAC entity as its JSON text in the column
+`stac_json` (sources/harvest.STAC_JSON); json.loads gives back the dict the
+API served, which the rules take exactly as the reference does.
+
 Byte parity: per-record assembly + json.dumps(indent=4, ensure_ascii=False)
 happens in Python inside Arrow batches (F.to_json cannot produce the
-reference's serialization — SURVEY.md §1.4). Null-vs-absent normalization:
-Spark rows cannot distinguish a JSON key that is absent from one that is
-null, so None-valued optional keys are dropped when rebuilding dicts
-(documented deviation; the reference crashes on several explicit-null cases
-the engine therefore handles totally).
+reference's serialization — SURVEY.md §1.4).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import json
+from typing import Callable, Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame
 
 from stac_to_geocore_spark.compat import rules
 
@@ -39,92 +39,19 @@ DEFAULT_ROOT_NAME = "CCMEO Datacube/ CCCOT Cube de données"
 DEFAULT_SOURCE_SYSTEM = "ccmeo-datacube"
 
 
-def _plain(v):
-    """Arrow/pandas value -> plain Python (lists, dicts, scalars).
-
-    toPandas() yields struct columns as plain dicts under Arrow but as
-    pyspark Row objects in a vanilla (non-Arrow) session; Row is a tuple
-    subclass, so it must be unwrapped BEFORE the list/tuple branch or the
-    keys are silently dropped."""
-    if isinstance(v, Row):
-        return {k: _plain(x) for k, x in v.asDict().items()}
-    if isinstance(v, np.ndarray):
-        return [_plain(x) for x in v]
-    if isinstance(v, (list, tuple)):
-        return [_plain(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _plain(x) for k, x in v.items()}
-    if isinstance(v, np.generic):
-        return v.item()
-    if v is pd.NA or (v is None):
-        return None
-    if isinstance(v, float) and np.isnan(v):
-        return None
-    return v
+def _coll_dict(row) -> dict:
+    """A collections_df row (Row or record dict) -> the STAC collection."""
+    return json.loads(row["stac_json"])
 
 
-def _mapping(v) -> dict:
-    """Struct value -> dict, whether Arrow (dict), vanilla session (Row), or
-    a list of (k, v) pairs (MapType under Arrow)."""
-    if isinstance(v, Row):
-        return v.asDict()
-    return dict(v)
+def _translate_each(df: DataFrame, translate: Callable[[dict], tuple[str, str]]) -> DataFrame:
+    """stac_json rows -> (key, json) rows, one `translate(entity)` call each."""
 
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield pd.DataFrame([translate(json.loads(t)) for t in b["stac_json"]], columns=["key", "json"])
 
-def _assets_dict(v):
-    """MapType arrives as list[(k, struct)] from Arrow, dict[str, Row] from a
-    vanilla session; None-title values are dropped so 'absent' semantics hold
-    (ref .get('title', default))."""
-    if v is None:
-        return None
-    items = v.items() if isinstance(v, dict) else v
-    out = {}
-    for k, a in items:
-        a = {kk: _plain(vv) for kk, vv in _mapping(a).items()}
-        if a.get("title") is None:
-            a.pop("title", None)
-        out[k] = a
-    return out if out else None
-
-
-def _links_list(v):
-    if v is None:
-        return None
-    return [dict(x) for x in _plain(v)]
-
-
-def _item_dict(row: pd.Series) -> dict:
-    props = _mapping(row["properties"]) if row["properties"] is not None else {}
-    props = {k: _plain(v) for k, v in props.items() if _plain(v) is not None or k == "datetime"}
-    return {
-        "id": row["id"],
-        "bbox": _plain(row["bbox"]),
-        "links": _links_list(row["links"]),
-        "assets": _assets_dict(row["assets"]),
-        "properties": props,
-        "collection": row["collection"],
-    }
-
-
-def _coll_dict(row: pd.Series) -> dict:
-    ext = row["extent"]
-    extent = None
-    if ext is not None:
-        ext = _mapping(ext)
-        extent = {
-            "spatial": {"bbox": _plain(_mapping(ext["spatial"])["bbox"])} if ext.get("spatial") is not None else None,
-            "temporal": {"interval": _plain(_mapping(ext["temporal"])["interval"])} if ext.get("temporal") is not None else None,
-        }
-        extent = {k: v for k, v in extent.items() if v is not None}
-    return {
-        "id": row["id"],
-        "title": row["title"],
-        "description": row["description"],
-        "keywords": _plain(row["keywords"]),
-        "extent": extent,
-        "links": _links_list(row["links"]),
-        "assets": _assets_dict(row["assets"]),
-    }
+    return df.mapInPandas(run, OUT_SCHEMA)
 
 
 def build_coll_meta(colls: list[dict]) -> dict:
@@ -150,27 +77,18 @@ def translate_items(
 ) -> DataFrame:
     """items -> (key, json) GeoCore docs. Collections are a small dim by
     contract (one HTTP GET in the reference), collected once and broadcast."""
-    spark = items_df.sparkSession
-    colls = [_coll_dict(r) for r in colls_df.toPandas().to_dict("records")]
-    meta_bc = spark.sparkContext.broadcast(build_coll_meta(colls))
+    colls = [_coll_dict(r) for r in colls_df.collect()]
+    meta_bc = items_df.sparkSession.sparkContext.broadcast(build_coll_meta(colls))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        meta = meta_bc.value
-        for b in batches:
-            keys, docs = [], []
-            for _, row in b.iterrows():
-                item = _item_dict(row)
-                coll_id = item["collection"]
-                props = rules.item_properties(
-                    item, meta.get(coll_id, {}), source, root_name, source_system
-                )
-                geom = rules.bbox_geometry(item["bbox"])
-                doc = rules.assemble_doc(props, geom)
-                keys.append(f"{source}-{coll_id}-{item['id']}.geojson")
-                docs.append(rules.serialize(doc))
-            yield pd.DataFrame({"key": keys, "json": docs})
+    def translate(item: dict) -> tuple[str, str]:
+        coll_id = item["collection"]
+        props = rules.item_properties(
+            item, meta_bc.value.get(coll_id, {}), source, root_name, source_system
+        )
+        doc = rules.assemble_doc(props, rules.bbox_geometry(item["bbox"]))
+        return f"{source}-{coll_id}-{item['id']}.geojson", rules.serialize(doc)
 
-    return items_df.mapInPandas(run, OUT_SCHEMA)
+    return _translate_each(items_df, translate)
 
 
 def translate_collections(
@@ -180,20 +98,13 @@ def translate_collections(
     root_name: str = DEFAULT_ROOT_NAME,
     source_system: str = DEFAULT_SOURCE_SYSTEM,
 ) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            keys, docs = [], []
-            for _, row in b.iterrows():
-                coll = _coll_dict(row)
-                props = rules.coll_properties(coll, source, root_id, root_name, source_system)
-                bbox = (coll.get("extent") or {}).get("spatial", {}).get("bbox", [None])[0]
-                geom = rules.bbox_geometry(bbox)
-                doc = rules.assemble_doc(props, geom)
-                keys.append(f"{source}-{coll['id']}.geojson")
-                docs.append(rules.serialize(doc))
-            yield pd.DataFrame({"key": keys, "json": docs})
+    def translate(coll: dict) -> tuple[str, str]:
+        props = rules.coll_properties(coll, source, root_id, root_name, source_system)
+        bbox = (coll.get("extent") or {}).get("spatial", {}).get("bbox", [None])[0]
+        doc = rules.assemble_doc(props, rules.bbox_geometry(bbox))
+        return f"{source}-{coll['id']}.geojson", rules.serialize(doc)
 
-    return colls_df.mapInPandas(run, OUT_SCHEMA)
+    return _translate_each(colls_df, translate)
 
 
 def translate_root(

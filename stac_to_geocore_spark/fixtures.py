@@ -24,18 +24,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
 )
 
 from stac_to_geocore_spark.images.codecs import encode_image, phash64
+from stac_to_geocore_spark.sources.harvest import stac_json_df
 
 LON_MIN, LON_MAX = -141.0, -52.0
 LAT_MIN, LAT_MAX = 41.0, 84.0
@@ -220,71 +219,6 @@ def polygons_df(spark: SparkSession, m: int, seed: int = DEFAULT_SEED) -> DataFr
 
 # --- STAC fixtures (FIXTURES.md §2-4): inputs to the compat layer ---
 
-STAC_LINK = StructType(
-    [
-        StructField("href", StringType(), True),
-        StructField("rel", StringType(), True),
-        StructField("title", StringType(), True),
-    ]
-)
-STAC_ASSET = StructType(
-    [
-        StructField("href", StringType(), True),
-        StructField("type", StringType(), True),
-        StructField("title", StringType(), True),
-        StructField("roles", ArrayType(StringType()), True),
-    ]
-)
-STAC_COLLECTION_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("title", StringType(), True),
-        StructField("description", StringType(), True),
-        StructField("keywords", ArrayType(StringType()), True),
-        StructField(
-            "extent",
-            StructType(
-                [
-                    StructField(
-                        "spatial",
-                        StructType([StructField("bbox", ArrayType(ArrayType(DoubleType())), True)]),
-                        True,
-                    ),
-                    StructField(
-                        "temporal",
-                        StructType([StructField("interval", ArrayType(ArrayType(StringType())), True)]),
-                        True,
-                    ),
-                ]
-            ),
-            True,
-        ),
-        StructField("links", ArrayType(STAC_LINK), True),
-        StructField("assets", MapType(StringType(), STAC_ASSET), True),
-    ]
-)
-STAC_ITEM_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("bbox", ArrayType(DoubleType()), True),
-        StructField("links", ArrayType(STAC_LINK), True),
-        StructField("assets", MapType(StringType(), STAC_ASSET), True),
-        StructField(
-            "properties",
-            StructType(
-                [
-                    StructField("datetime", StringType(), True),
-                    StructField("created", StringType(), True),
-                    StructField("updated", StringType(), True),
-                    StructField("description", StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        StructField("collection", StringType(), True),
-    ]
-)
-
 API_ROOT = "https://datacube.example.ca/stac/api"
 
 
@@ -456,11 +390,11 @@ def make_fake_stac_fetch(n_items: int = 240, page_size: int = 30, seed: int = DE
 
 
 def stac_collections_df(spark: SparkSession, seed: int = DEFAULT_SEED) -> DataFrame:
-    return spark.createDataFrame(stac_collections_fixture(seed), STAC_COLLECTION_SCHEMA)
+    return stac_json_df(spark, stac_collections_fixture(seed))
 
 
 def stac_items_df(spark: SparkSession, n: int = 240, seed: int = DEFAULT_SEED) -> DataFrame:
-    return spark.createDataFrame(stac_items_fixture(n, seed), STAC_ITEM_SCHEMA)
+    return stac_json_df(spark, stac_items_fixture(n, seed))
 
 
 def fake_fetch_factory(options: dict):

@@ -10,6 +10,10 @@ application:
     run_harvest_sink(docs, store)                                # K1-K3
       (or snapshot_overwrite for atomic replace semantics)
 
+Collections and items travel as their JSON text (one `stac_json` column)
+from the page fetch to the translation, which decodes each back to the dict
+the API served.
+
 Differences from the reference, by design:
 - item fetch + translation are distributed (the reference is one thread);
 - the null template is a constant, not an S3 GET per record;
@@ -47,7 +51,7 @@ def run_harvest(
     """Full harvest -> translate -> sink. Returns the manifest key list."""
     root, colls_df, items_df = harvest(spark, api_root, fetch)
 
-    colls = [_coll_dict(r) for r in colls_df.toPandas().to_dict("records")]
+    colls = [_coll_dict(r) for r in colls_df.collect()]
     root_key, root_json = translate_root(root, colls, source, root_name, source_system)
     root_id = root_key[len(source) + len("-root-") : -len(".geojson")]
 

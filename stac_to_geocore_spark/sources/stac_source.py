@@ -10,16 +10,18 @@ The reference walks /search pages serially inline with translation
 once on the driver inside `partitions()` (same rules as
 sources/harvest.plan_pages: non-200 stops, empty pages dropped, Franklin's
 trailing-next quirk handled via returned>=matched), and every page URL
-becomes one InputPartition, so the fetch+parse fans out across executors
-and composes with the whole DataFrame surface (pushdown-ready projections,
-joins, writes) without any bespoke driver code.
+becomes one InputPartition, so the page fetch fans out across executors
+and composes with the whole DataFrame surface (joins, writes) without any
+bespoke driver code. Each item arrives as its JSON text in the single
+column `stac_json`, the same row the harvest path emits
+(sources/harvest.read_page).
 
 Options:
   api_root   (required) STAC API root; pages planned from <api_root>/search
   fetch      "http" (default) or "module:callable" — a factory called with
              the options dict returning fetch(url) -> (status, json_dict);
              lets tests run the deterministic in-process fake API.
-  max_pages  planner page cap (default 10000)
+  max_pages  cap on the pages the planner fetches (default 10000)
 """
 
 from __future__ import annotations
@@ -33,32 +35,18 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import StructType
+
+from stac_to_geocore_spark.sources.harvest import STAC_JSON, http_fetch, plan_pages, read_page
 
 
 def _resolve_fetch(options: dict):
     spec = options.get("fetch", "http")
     if spec == "http":
-        from stac_to_geocore_spark.sources.harvest import http_fetch
-
         return http_fetch
     mod, _, attr = spec.partition(":")
     factory = getattr(importlib.import_module(mod), attr)
     return factory(options)
-
-
-def _conv(value, dtype):
-    """JSON value -> tuple-shaped row matching the Spark type (structs as
-    tuples in field order, the layout the Python data source API expects)."""
-    if value is None:
-        return None
-    if isinstance(dtype, StructType):
-        return tuple(_conv(value.get(f.name), f.dataType) for f in dtype.fields)
-    if isinstance(dtype, ArrayType):
-        return [_conv(v, dtype.elementType) for v in value]
-    if isinstance(dtype, MapType):
-        return {k: _conv(v, dtype.valueType) for k, v in value.items()}
-    return value
 
 
 class _StacPage(InputPartition):
@@ -67,25 +55,18 @@ class _StacPage(InputPartition):
 
 
 class _StacItemsReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
+    def __init__(self, options: dict):
         self._options = dict(options)
 
     def partitions(self) -> list[InputPartition]:
-        from stac_to_geocore_spark.sources.harvest import plan_pages
-
         fetch = _resolve_fetch(self._options)
         root = self._options["api_root"].rstrip("/")
         max_pages = int(self._options.get("max_pages", 10_000))
         return [_StacPage(u) for u in plan_pages(fetch, f"{root}/search", max_pages)]
 
     def read(self, partition: _StacPage) -> Iterator[tuple]:
-        fetch = _resolve_fetch(self._options)
-        status, body = fetch(partition.url)
-        if status != 200:  # non-200 pages contribute 0 rows (ref app.py P9)
-            return
-        for feat in body.get("features", []):
-            yield _conv(feat, self._schema)
+        for text in read_page(_resolve_fetch(self._options), partition.url):
+            yield (text,)
 
 
 class StacDataSource(DataSource):
@@ -93,20 +74,18 @@ class StacDataSource(DataSource):
     def name(cls) -> str:
         return "stac"
 
-    def schema(self) -> StructType:
-        from stac_to_geocore_spark.fixtures import STAC_ITEM_SCHEMA
-
-        return STAC_ITEM_SCHEMA
+    def schema(self) -> str:
+        return STAC_JSON
 
     def reader(self, schema: StructType) -> DataSourceReader:
         if "api_root" not in self.options:
             raise ValueError("stac source requires option 'api_root'")
-        return _StacItemsReader(schema, self.options)
+        return _StacItemsReader(self.options)
 
     def simpleStreamReader(self, schema: StructType) -> "SimpleDataSourceStreamReader":
         if "api_root" not in self.options:
             raise ValueError("stac source requires option 'api_root'")
-        return _StacStreamReader(schema, self.options)
+        return _StacStreamReader(self.options)
 
 
 class _StacStreamReader(SimpleDataSourceStreamReader):
@@ -126,16 +105,13 @@ class _StacStreamReader(SimpleDataSourceStreamReader):
     standard limitation of cursorless HTTP pagination (the reference's
     batch harvest has the identical property)."""
 
-    def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
+    def __init__(self, options: dict):
         self._options = dict(options)
         self._pages: list[str] | None = None
         self._batch_pages = int(options.get("pages_per_batch", 1))
 
     def _page_list(self) -> list[str]:
         if self._pages is None:
-            from stac_to_geocore_spark.sources.harvest import plan_pages
-
             fetch = _resolve_fetch(self._options)
             root = self._options["api_root"].rstrip("/")
             self._pages = plan_pages(fetch, f"{root}/search",
@@ -162,11 +138,4 @@ class _StacStreamReader(SimpleDataSourceStreamReader):
 
     def _rows(self, lo: int, hi: int) -> list[tuple]:
         fetch = _resolve_fetch(self._options)
-        out = []
-        for url in self._page_list()[lo:hi]:
-            status, body = fetch(url)
-            if status != 200:
-                continue
-            for feat in body.get("features", []):
-                out.append(_conv(feat, self._schema))
-        return out
+        return [(text,) for url in self._page_list()[lo:hi] for text in read_page(fetch, url)]

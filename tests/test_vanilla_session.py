@@ -1,8 +1,5 @@
-"""Regression for the round-1 driver-gate crash: the gate runs a vanilla
-SparkSession (no Arrow configs), where toPandas() returns struct columns as
-pyspark Row objects instead of dicts. dict(Row) raises ValueError, and Row is
-a tuple subclass so generic list handling silently drops keys. The translate
-layer must produce byte-identical output under both toPandas() modes.
+"""The driver gate runs a vanilla SparkSession (no Arrow configs). The
+translate layer must produce byte-identical output with Arrow on and off.
 """
 
 import pytest
@@ -42,13 +39,3 @@ def test_translate_identical_with_and_without_arrow(spark, no_arrow):
     assert len(without_arrow) == 24 + stac_collections_df(spark).count()
     for k in with_arrow:
         assert without_arrow[k] == with_arrow[k], k
-
-
-def test_coll_dict_handles_row_objects(spark, no_arrow):
-    # the exact round-1 crash site: _coll_dict over a vanilla toPandas()
-    from stac_to_geocore_spark.compat.translate import _coll_dict
-
-    colls = stac_collections_df(spark)
-    dicts = [_coll_dict(r) for r in colls.toPandas().to_dict("records")]
-    assert all(isinstance(d["extent"], dict) for d in dicts if d["extent"] is not None)
-    assert all(isinstance(d["links"][0], dict) for d in dicts if d["links"])
